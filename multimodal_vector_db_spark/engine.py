@@ -19,19 +19,29 @@ Mirrors ``src/retrieval/search_engine.py``'s surface:
 
 from __future__ import annotations
 
+import contextlib
 import functools
+import itertools
 import threading
 from typing import Any, Callable
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multimodal_vector_db_spark.embedders.fake import fake_embed_numpy
+from multimodal_vector_db_spark.functions.blasctl import gemm_section
 from multimodal_vector_db_spark.operators.knn import (
     knn_search,
     knn_search_blocked,
+    topk_rows_1d,
+    topk_rows_2d,
 )
-from multimodal_vector_db_spark.operators.rerank import rerank
+from multimodal_vector_db_spark.operators.rerank import (
+    MMR_LAMBDA,
+    mmr_order,
+    rerank,
+)
 from multimodal_vector_db_spark.sources.corpus import (
     active,
     space_for_modality,
@@ -60,6 +70,61 @@ _ITEMS_SCHEMA = (
     "embedding array<float>, dim int, deleted boolean, "
     "content string, display_name string"
 )
+
+
+#: no rows: the selection of a content type a space has no live row of
+_NO_ROWS = np.zeros(0, dtype=np.int64)
+
+
+def _modality_rows(modalities: list, offset: int = 0) -> dict:
+    """Ascending row positions per modality value, shifted by
+    ``offset`` — the micro-path cache's ``mod_rows``."""
+    rows: dict[Any, list[int]] = {}
+    for i, m in enumerate(modalities, start=offset):
+        rows.setdefault(m, []).append(i)
+    return {m: np.array(r, dtype=np.int64) for m, r in rows.items()}
+
+
+def _filter_rows(cache: dict, content_type: str | None) -> np.ndarray | None:
+    """Row positions of a micro-path cache that a content-type filter
+    keeps; None when there is no filter (every row)."""
+    if content_type is None:
+        return None
+    return cache["mod_rows"].get(content_type, _NO_ROWS)
+
+
+def _slack_buffer(like: np.ndarray, n: int) -> np.ndarray:
+    """An uninitialized buffer for ``n`` rows shaped like ``like``'s,
+    plus geometric append headroom (half again, plus 8 rows): a block
+    grown by appends is then copied O(log n) times, not per append."""
+    return np.empty((int(n * 1.5) + 8,) + like.shape[1:], dtype=like.dtype)
+
+
+def _copy_kept(src: np.ndarray, keep: np.ndarray, dst: np.ndarray) -> None:
+    """``dst[:keep.sum()] = src[keep]`` as one pass of slice copies,
+    one per run of kept rows (a remove drops a few rows; boolean
+    indexing into a fresh buffer would copy the block twice)."""
+    drop = np.flatnonzero(~keep)
+    at = 0
+    for lo, hi in zip(np.r_[0, drop + 1], np.r_[drop, len(keep)]):
+        dst[at : at + hi - lo] = src[lo:hi]
+        at += hi - lo
+
+
+def _arrow_matrix(col, width: int) -> np.ndarray:
+    """The float64 (rows × width) matrix of an Arrow list<float> column
+    whose lists all have one length (``width`` is the empty column's).
+    float32 → float64 is exact, so the values equal a Row collect's."""
+    import pyarrow.compute as pc
+
+    if len(col) == 0:
+        return np.zeros((0, width), dtype=np.float64)
+    col = col.combine_chunks()
+    lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if (lengths != lengths[0]).any():
+        raise ValueError("embedding lists of unequal length in one space")
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(col), int(lengths[0]))
 
 
 def _serialized_mutation(fn):
@@ -208,13 +273,10 @@ class MultiModalSearchEngine:
         #: agg instead of re-measuring (any mutation bumps the epoch)
         self._local_over_budget: dict[str, int] = {}
         #: per-space driver cache for the micro-path: space →
-        #: {epoch, ids, emb, modality, payload}; dropped whenever the
-        #: corpus epoch moves past the cached one
+        #: {epoch, ids, emb, mod_rows, payload, bytes, buf_ids, buf_emb}
+        #: (see ``_local_corpus``); extended by ingests, pruned by
+        #: removes, rebuilt when the corpus epoch moves past it otherwise
         self._local_cache: dict[str, dict[str, Any]] = {}
-        #: derived cross-space structures for the compare micro-path
-        #: (concatenated ids, per-modality selections) — same epoch
-        #: contract as _local_cache
-        self._compare_cache: dict[str, Any] | None = None
         #: corpus mutation epoch — bumped by every path that reassigns
         #: ``self.items`` (ingest, bulk ingest, remove, audio ingest) so
         #: driver caches can invalidate without comparing DataFrames
@@ -240,10 +302,11 @@ class MultiModalSearchEngine:
         #: GIL-held result assembly — 64 runnable threads thrash GIL
         #: ownership and HALVE aggregate qps vs 16; parking the excess
         #: keeps throughput flat at any caller count. 0/None disables.
+        #: Entered with ``with`` around every micro-path call.
         self._local_gate = (
             threading.BoundedSemaphore(local_max_concurrency)
             if local_max_concurrency
-            else None
+            else contextlib.nullcontext()
         )
         #: CUMULATIVE drift latch (round 10): per-batch `drift` only
         #: sees the latest batch, so many batches each marginally below
@@ -555,8 +618,6 @@ class MultiModalSearchEngine:
         micro-path caches are PRUNED in place (tombstoned rows leave
         the active view), so interleaved remove/search stays
         collect-free like the ingest path."""
-        import numpy as np
-
         self._transform_items(
             lambda cur: cur.withColumn(
                 "deleted",
@@ -571,23 +632,9 @@ class MultiModalSearchEngine:
         for space, cached in list(self._local_cache.items()):
             if cached["epoch"] != prev_epoch:
                 continue  # already stale — rebuilds lazily
-            hit = np.isin(cached["ids"], drop)
-            keep = np.nonzero(~hit)[0]
-            pruned = [cached["payload"][i] for i in keep]
-            freed = sum(
-                self._row_payload_bytes(cached["payload"][i])
-                for i in np.nonzero(hit)[0]
-            ) + int(hit.sum()) * self.dim * 8
-            # replace-not-mutate: concurrent readers holding the old
-            # block keep a consistent (pre-mutation) view
-            self._local_cache[space] = {
-                "epoch": self._epoch,
-                "ids": cached["ids"][keep],
-                "emb": cached["emb"][keep],
-                "modality": cached["modality"][keep],
-                "payload": pruned,
-                "bytes": cached.get("bytes", 0) - freed,
-            }
+            self._local_cache[space] = self._local_cache_pruned(
+                cached, ~np.isin(cached["ids"], drop)
+            )
         self._maybe_compact_lineage()
 
     # -- ANN route (SURVEY §4's deferred planner rule, rounds 8-9) ------
@@ -2165,18 +2212,17 @@ class MultiModalSearchEngine:
         the whole space on every search. The appended block is built
         from the SAME values a rebuild would collect (embeddings pass
         through the float32 cast parquet/DataFrame storage applies, so
-        arrays stay bit-identical — parity-tested), the footprint
-        estimate grows by the same arithmetic as the build-time agg,
-        and a cache outgrowing the budget is dropped with an
-        over-budget verdict. Caches whose epoch is already stale are
-        left alone (they rebuild lazily). Replace-not-mutate, so
-        concurrent readers keep a consistent block.
+        arrays stay bit-identical — parity-tested), the per-modality
+        row positions grow by the new rows, the footprint estimate
+        grows by the same arithmetic as the build-time agg, and a
+        cache outgrowing the budget is dropped with an over-budget
+        verdict. Caches whose epoch is already stale are left alone
+        (they rebuild lazily). Replace-not-mutate, so concurrent
+        readers keep a consistent block.
 
         ``data`` rows are ``_ITEMS_SCHEMA``-ordered tuples
         (id, modality, space, embedding, dim, deleted, content,
         display_name) — exactly what :meth:`batch_ingest` builds."""
-        import numpy as np
-
         if self.local_exact_budget_bytes <= 0 or not data:
             return
         pay_cols = (
@@ -2211,7 +2257,7 @@ class MultiModalSearchEngine:
             added = sum(
                 self._row_payload_bytes(p) for p in payload
             ) + len(ts) * self.dim * 8
-            total = cached.get("bytes", 0) + added
+            total = cached["bytes"] + added
             if total > self.local_exact_budget_bytes:
                 self._local_cache.pop(space, None)
                 self._local_over_budget[space] = self._epoch
@@ -2223,7 +2269,8 @@ class MultiModalSearchEngine:
             new_emb = np.asarray(
                 [t[3] for t in ts], dtype=np.float32
             ).astype(np.float64)
-            n_old, n_new = len(cached["ids"]), len(ts)
+            n_old = len(cached["ids"])
+            n = n_old + len(ts)
             # amortized append: rows land in the PREALLOCATED tail of
             # the backing buffers (readers' views cover [:n_old], a
             # region these writes never touch), with geometric growth
@@ -2231,33 +2278,29 @@ class MultiModalSearchEngine:
             # re-concatenated the whole 182 MB ref-scale matrix
             # (~450 ms/row); now a copy happens only on capacity
             # growth, amortized O(rows appended)
-            be, bi, bm = (
-                cached.get("buf_emb", cached["emb"]),
-                cached.get("buf_ids", cached["ids"]),
-                cached.get("buf_mod", cached["modality"]),
-            )
-            if n_old + n_new > be.shape[0]:
-                cap = max(n_old + n_new, int(n_old * 1.5) + 8)
-                grown_e = np.empty((cap, be.shape[1]), dtype=be.dtype)
-                grown_e[:n_old] = cached["emb"]
-                grown_i = np.empty(cap, dtype=bi.dtype)
-                grown_i[:n_old] = cached["ids"]
-                grown_m = np.empty(cap, dtype=object)
-                grown_m[:n_old] = cached["modality"]
-                be, bi, bm = grown_e, grown_i, grown_m
-            be[n_old : n_old + n_new] = new_emb
-            bi[n_old : n_old + n_new] = [t[0] for t in ts]
-            bm[n_old : n_old + n_new] = [t[1] for t in ts]
+            be, bi = cached["buf_emb"], cached["buf_ids"]
+            if n > len(bi):
+                be, bi = _slack_buffer(be, n), _slack_buffer(bi, n)
+                be[:n_old] = cached["emb"]
+                bi[:n_old] = cached["ids"]
+            be[n_old:n] = new_emb
+            bi[n_old:n] = [t[0] for t in ts]
+            mod_rows = dict(cached["mod_rows"])
+            for m, rows in _modality_rows([t[1] for t in ts], n_old).items():
+                mod_rows[m] = (
+                    np.concatenate([mod_rows[m], rows])
+                    if m in mod_rows
+                    else rows
+                )
             self._local_cache[space] = {
                 "epoch": self._epoch,
-                "ids": bi[: n_old + n_new],
-                "emb": be[: n_old + n_new],
-                "modality": bm[: n_old + n_new],
+                "ids": bi[:n],
+                "emb": be[:n],
+                "mod_rows": mod_rows,
                 "payload": cached["payload"] + payload,
                 "bytes": total,
-                "buf_emb": be,
                 "buf_ids": bi,
-                "buf_mod": bm,
+                "buf_emb": be,
             }
         # spaces this ingest did NOT touch keep their rows — restamp
         # their valid caches so the unchanged corpus isn't re-collected
@@ -2267,10 +2310,58 @@ class MultiModalSearchEngine:
                     **cached, "epoch": self._epoch
                 }
 
+    def _local_cache_pruned(
+        self, cached: dict[str, Any], keep: np.ndarray
+    ) -> dict[str, Any]:
+        """``cached`` without the rows ``keep`` (a boolean row mask)
+        drops, stamped with the current epoch. A NEW block
+        (replace-not-mutate: readers holding the old one keep a
+        consistent pre-remove view), copied once into buffers with the
+        append headroom :meth:`_local_cache_extend` grows to, so the
+        next ingest appends in place instead of copying the matrix a
+        second time."""
+        n = int(keep.sum())
+        be = _slack_buffer(cached["emb"], n)
+        bi = _slack_buffer(cached["ids"], n)
+        _copy_kept(cached["emb"], keep, be)
+        _copy_kept(cached["ids"], keep, bi)
+        new_row = np.cumsum(keep) - 1  # old row position → new one
+        mod_rows = {}
+        for m, rows in cached["mod_rows"].items():
+            kept = rows[keep[rows]]
+            if len(kept):
+                mod_rows[m] = new_row[kept]
+        payload = cached["payload"]
+        freed = sum(
+            self._row_payload_bytes(payload[i])
+            for i in np.flatnonzero(~keep)
+        ) + (len(keep) - n) * self.dim * 8
+        return {
+            "epoch": self._epoch,
+            "ids": bi[:n],
+            "emb": be[:n],
+            "mod_rows": mod_rows,
+            "payload": list(itertools.compress(payload, keep.tolist())),
+            "bytes": cached["bytes"] - freed,
+            "buf_ids": bi,
+            "buf_emb": be,
+        }
+
     def _local_corpus(self, space: str) -> dict[str, Any] | None:
-        """The micro-path's corpus block: ids + a float64 embedding
-        matrix + payload row dicts for ``space``'s LIVE rows, resident
-        on the driver. Returns None when disabled
+        """The micro-path's corpus block for ``space``'s LIVE rows,
+        resident on the driver:
+
+        - ``ids`` (int64) and ``emb`` (float64, rows × width), views of
+          the append buffers ``buf_ids`` / ``buf_emb``;
+        - ``mod_rows``: modality → ascending int64 row positions, the
+          content-type filter and the compare path's per-modality
+          groups (a modality with no live row has no entry);
+        - ``payload``: one dict per row of every column but
+          ``embedding`` and ``dim``, with the values and Python types a
+          ``Row`` collect gives;
+        - ``bytes``: the footprint estimate it was admitted at.
+
+        Returns None when disabled
         (``local_exact_budget_bytes=0``) or when the space's estimated
         TOTAL resident footprint — vector mass (rows × dim × 8 B, the
         float64 matrix actually held) PLUS the measured payload string bytes
@@ -2286,15 +2377,14 @@ class MultiModalSearchEngine:
         An over-budget verdict is remembered per epoch so repeated
         searches don't re-run the footprint agg.
 
-        Keyed on the corpus mutation epoch: every ingest/remove bumps
-        ``_epoch`` so the next micro-path call rebuilds from the
-        then-current corpus (one collect of the space's rows — the same
-        cost as a single Spark-path search, amortized over every call
-        until the next mutation). The epoch is snapshotted BEFORE the
+        Keyed on the corpus mutation epoch: interactive ingests and
+        removes maintain a valid block in place, and any other mutation
+        makes the next micro-path call rebuild from the then-current
+        corpus (one Arrow collect of the space's rows — the same cost
+        as a single Spark-path search, amortized over every call until
+        the next such mutation). The epoch is snapshotted BEFORE the
         collect: a concurrent ingest mid-build leaves the cache stamped
         stale, never new-epoch-with-old-rows."""
-        import numpy as np
-
         if self.local_exact_budget_bytes <= 0 or self._corpus_absent():
             return None
         n = self._space_rows(space)
@@ -2340,30 +2430,34 @@ class MultiModalSearchEngine:
         if total_bytes > self.local_exact_budget_bytes:
             self._local_over_budget[space] = epoch
             return None
-        rows = corpus.collect()
-        # float32 parquet values -> exact float64 (same cast as the
-        # blocked scorer's astype(np.float64) — values are identical)
-        emb = (
-            np.array([r["embedding"] for r in rows], dtype=np.float64)
-            if rows
-            else np.zeros((0, self.dim), dtype=np.float64)
-        )
-        # NOTE: no separate list-of-lists copy of the vectors is kept —
-        # emb.tolist() slices reproduce the collected float values
-        # bit-for-bit (float32 parquet values are exact in float64), so
-        # diversity reranking reads rows out of the matrix on demand
+        # one Arrow collect: the vectors arrive as a flat float32
+        # buffer, not as a Python float object per element (a Row
+        # collect of the ref-shaped corpus spent most of the cold call
+        # boxing floats). Payload columns go through Spark's own
+        # Arrow-to-Row value conversion, so they equal a Row collect's
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+        from pyspark.sql.types import StructType
+
+        table = corpus.toArrow()
+        ids = np.array(table.column("id").to_numpy(), dtype=np.int64)
+        emb = _arrow_matrix(table.column("embedding"), self.dim)
+        payload = [
+            dict(zip(pay_cols, t))
+            for t in ArrowTableToRowsConversion.convert(
+                table.select(pay_cols),
+                StructType([corpus.schema[c] for c in pay_cols]),
+                return_as_tuples=True,
+            )
+        ]
         cached = {
             "epoch": epoch,
-            "ids": np.array([r["id"] for r in rows], dtype=np.int64),
+            "ids": ids,
             "emb": emb,
-            "modality": np.array(
-                [r["modality"] for r in rows], dtype=object
-            ),
-            "payload": [{c: r[c] for c in pay_cols} for r in rows],
-            # estimated resident footprint this block was admitted at —
-            # the compare micro-path sums these across spaces, and the
-            # incremental-append path grows it in place
+            "mod_rows": _modality_rows([p["modality"] for p in payload]),
+            "payload": payload,
             "bytes": total_bytes,
+            "buf_ids": ids,
+            "buf_emb": emb,
         }
         self._local_cache[space] = cached
         return cached
@@ -2372,7 +2466,7 @@ class MultiModalSearchEngine:
         self, cache: dict, space: str, recall_floor: float
     ) -> None:
         n = len(cache["ids"])
-        mb = cache.get("bytes", n * self.dim * 8) / (1024 * 1024)
+        mb = cache["bytes"] / (1024 * 1024)
         self.last_route = {
             "route": "exact-local",
             "reason": (
@@ -2411,54 +2505,51 @@ class MultiModalSearchEngine:
         Concurrency: admission-gated (``local_max_concurrency``) — see
         ``_local_gate``; the blocked wait releases the GIL, which is
         the whole point."""
-        import numpy as np
-
-        from multimodal_vector_db_spark.operators.knn import topk_rows_1d
-
         cache = self._local_corpus(space)
         if cache is None:
             return None
-        if self._local_gate is not None:
-            self._local_gate.acquire()
-        try:
+        with self._local_gate:
             return self._search_local_admitted(
                 cache, space, qvec, k, fetch_n, filter_content_type,
-                strategy, recall_floor, np, topk_rows_1d,
+                strategy, recall_floor,
             )
-        finally:
-            if self._local_gate is not None:
-                self._local_gate.release()
 
     def _search_local_admitted(
         self, cache, space, qvec, k, fetch_n, filter_content_type,
-        strategy, recall_floor, np, topk_rows_1d,
+        strategy, recall_floor,
     ) -> list[dict[str, Any]]:
+        """One matvec over the whole block, then O(candidates) work:
+        a content-type filter indexes the SCORE vector with the
+        modality's row positions (gathering its sub-matrix instead
+        copied most of the block per call), and diversity reranks on
+        the candidates' rows of the float64 block, with no list
+        round-trip. Only the returned rows become payload dicts."""
         ids, emb = cache["ids"], cache["emb"]
-        sel = None
-        if filter_content_type is not None:
-            mask = cache["modality"] == filter_content_type
-            sel = np.nonzero(mask)[0]
-            ids, emb = ids[sel], emb[sel]
-        diversity = strategy not in (None, "distance")
+        sel = _filter_rows(cache, filter_content_type)
+        n = len(ids) if sel is None else len(sel)
         rows: list[dict[str, Any]] = []
-        if len(ids):
-            from multimodal_vector_db_spark.functions.blasctl import (
-                gemm_section,
-            )
-
-            q = np.asarray(qvec, dtype=np.float64)
+        if n:
             with gemm_section():
-                s = emb @ q
-            top = topk_rows_1d(s, ids, min(fetch_n, len(ids)))
-            for t in top:
-                src = int(sel[t]) if sel is not None else int(t)
-                d = dict(cache["payload"][src])
-                d["sim"] = float(s[t])
+                s = emb @ np.asarray(qvec, dtype=np.float64)
+            if sel is not None:
+                s, ids = s[sel], ids[sel]
+            top = topk_rows_1d(s, ids, min(fetch_n, n))
+            src = top if sel is None else sel[top]
+            lam = MMR_LAMBDA.get(strategy)
+            order = (
+                range(min(k, len(top)))
+                if lam is None
+                else mmr_order(s[top], emb[src], k, lam)
+            )
+            diversity = strategy not in (None, "distance")
+            for i in order:
+                d = dict(cache["payload"][src[i]])
+                d["sim"] = float(s[top[i]])
                 if diversity:
-                    d["embedding"] = cache["emb"][src].tolist()
+                    d["embedding"] = emb[src[i]].tolist()
                 rows.append(d)
         self._local_route_log(cache, space, recall_floor)
-        return rerank(rows, strategy=strategy, top_k=k)
+        return rows
 
     def _search_batch_local(
         self,
@@ -2473,51 +2564,34 @@ class MultiModalSearchEngine:
         selection (``topk_rows_2d``), identical ranking to
         ``knn_join_blocked`` + its window. Admission-gated like
         :meth:`_search_local`."""
-        import numpy as np
-
-        from multimodal_vector_db_spark.operators.knn import topk_rows_2d
-
         cache = self._local_corpus(space)
         if cache is None:
             return None
-        if self._local_gate is not None:
-            self._local_gate.acquire()
-        try:
+        with self._local_gate:
             return self._search_batch_local_admitted(
-                cache, space, qvecs, k, filter_content_type,
-                recall_floor, np, topk_rows_2d,
+                cache, space, qvecs, k, filter_content_type, recall_floor,
             )
-        finally:
-            if self._local_gate is not None:
-                self._local_gate.release()
 
     def _search_batch_local_admitted(
-        self, cache, space, qvecs, k, filter_content_type,
-        recall_floor, np, topk_rows_2d,
+        self, cache, space, qvecs, k, filter_content_type, recall_floor,
     ) -> dict[int, list[dict[str, Any]]]:
-        ids, emb = cache["ids"], cache["emb"]
-        sel = None
-        if filter_content_type is not None:
-            mask = cache["modality"] == filter_content_type
-            sel = np.nonzero(mask)[0]
-            ids, emb = ids[sel], emb[sel]
+        ids = cache["ids"]
+        sel = _filter_rows(cache, filter_content_type)
+        n = len(ids) if sel is None else len(sel)
         out: dict[int, list[dict[str, Any]]] = {
             i: [] for i in range(len(qvecs))
         }
-        if len(ids):
-            from multimodal_vector_db_spark.functions.blasctl import (
-                gemm_section,
-            )
-
+        if n:
             Q = np.array(qvecs, dtype=np.float64)  # (nq, d)
             with gemm_section():
-                S = emb @ Q.T  # (n, nq)
-            kk = min(k, len(ids))
-            top = topk_rows_2d(S, ids, kk)  # (kk, nq)
+                S = cache["emb"] @ Q.T  # (n, nq)
+            if sel is not None:
+                S, ids = S[sel], ids[sel]
+            top = topk_rows_2d(S, ids, min(k, n))  # (kk, nq)
+            src = top if sel is None else sel[top]
             for j in range(len(qvecs)):
-                for t in top[:, j]:
-                    src = int(sel[t]) if sel is not None else int(t)
-                    d = dict(cache["payload"][src])
+                for t, r in zip(top[:, j], src[:, j]):
+                    d = dict(cache["payload"][r])
                     d["sim"] = float(S[t, j])
                     out[j].append(d)
         self._local_route_log(cache, space, recall_floor)
@@ -2542,10 +2616,6 @@ class MultiModalSearchEngine:
         ``[(query_idx, modality, space, id, display_name, sim, rank)]``
         sorted by (query, modality, rank), or None when over budget /
         disabled."""
-        import numpy as np
-
-        from multimodal_vector_db_spark.operators.knn import topk_rows_1d
-
         if self.local_exact_budget_bytes <= 0 or self._corpus_absent():
             return None
         self._space_rows(default_space)  # materialize the per-space map
@@ -2569,120 +2639,68 @@ class MultiModalSearchEngine:
                 return None
             caches[s] = c
         if (
-            sum(c.get("bytes", 0) for c in caches.values())
+            sum(c["bytes"] for c in caches.values())
             > self.local_exact_budget_bytes
         ):
             # every space fits individually but not together — the
             # compare path holds ALL of them resident at once
             return None
-        # admission gate (see _local_gate): same contract as
-        # _search_local — excess concurrent callers park on the
-        # semaphore instead of convoying on the GIL
-        if self._local_gate is not None:
-            self._local_gate.acquire()
-        try:
+        with self._local_gate:
             return self._compare_local_rows_admitted(
-                caches, spaces, q_by_space_list, k_per_modality,
-                default_space,
+                {s: caches[s] for s in spaces if len(caches[s]["ids"])},
+                q_by_space_list, k_per_modality, default_space,
             )
-        finally:
-            if self._local_gate is not None:
-                self._local_gate.release()
 
     def _compare_local_rows_admitted(
         self,
         caches: dict[str, dict],
-        spaces: list[str],
         q_by_space_list: list[dict[str, list[float]]],
         k_per_modality: int,
         default_space: str,
     ) -> list[tuple]:
-        import numpy as np
-
-        from multimodal_vector_db_spark.operators.knn import topk_rows_1d
-        # per-epoch derived structures (concatenated ids, per-modality
-        # row selections, row→(space, local index) maps): building
-        # these costs ~n Python-object ops, so they are computed ONCE
-        # per corpus epoch, not per call. Validity is keyed on the
-        # EPOCHS OF THE PER-SPACE CACHES it was built from, not on
-        # self._epoch: a per-space cache snapshots its epoch BEFORE its
-        # collect (an ingest landing mid-collect leaves it stamped
-        # stale), so a cc stamped with the then-current global epoch
-        # could match self._epoch while the per-space caches it indexes
-        # into have since been rebuilt — misaligned group_sel/ids_cat
-        # over fresh matrices. Cache epochs strictly increase across
-        # rebuilds, so equality here proves cc was derived from exactly
-        # these cache objects.
-        cache_epochs = {s: caches[s]["epoch"] for s in spaces}
-        cc = self._compare_cache
-        if (
-            cc is None
-            or cc["spaces"] != spaces
-            or cc.get("cache_epochs") != cache_epochs
-        ):
-            ids_all, mods, sp_idx, row_idx = [], [], [], []
-            for si, s in enumerate(spaces):
-                c = caches[s]
-                n_s = len(c["ids"])
-                if not n_s:
-                    continue
-                ids_all.append(c["ids"])
-                mods.append(c["modality"])
-                sp_idx.append(np.full(n_s, si, dtype=np.int32))
-                row_idx.append(np.arange(n_s, dtype=np.int64))
-            if not ids_all:
-                return []
-            mods_cat = np.concatenate(mods)
-            # None-safe ordering: a null modality is its own group (the
-            # Spark window form partitions it too); it sorts last
-            groups = sorted(
-                set(mods_cat.tolist()), key=lambda g: (g is None, g)
-            )
-            cc = {
-                "cache_epochs": cache_epochs,
-                "spaces": spaces,
-                "ids_cat": np.concatenate(ids_all),
-                "sp_idx": np.concatenate(sp_idx),
-                "row_idx": np.concatenate(row_idx),
-                "groups": groups,
-                "group_sel": {
-                    g: np.nonzero(mods_cat == g)[0] for g in groups
-                },
-            }
-            self._compare_cache = cc
-        nq = len(q_by_space_list)
-        # one GEMM per space scores EVERY query at once (the batch
-        # twin's whole point), then exact per-(query, modality) top-k
-        from multimodal_vector_db_spark.functions.blasctl import (
-            gemm_section,
-        )
-
+        """Score every non-empty space once (one GEMM scores every
+        query), then take each (query, modality) top-k. A modality's
+        candidates are its row positions in each space's cache
+        (``mod_rows``), which ingests extend and removes prune together
+        with the block they index — nothing is derived across spaces
+        per epoch, so a write costs the next compare nothing."""
+        spaces = list(caches)
         with gemm_section():
-            S_all = [
+            scores = [
                 caches[s]["emb"]
                 @ np.array(
                     [q.get(s, q[default_space]) for q in q_by_space_list],
                     dtype=np.float64,
                 ).T
                 for s in spaces
-                if len(caches[s]["ids"])
+            ]  # per space: (n_s, nq)
+        # None-safe ordering: a null modality is its own group (the
+        # Spark window form partitions it too); it sorts last
+        groups = sorted(
+            {g for c in caches.values() for g in c["mod_rows"]},
+            key=lambda g: (g is None, g),
+        )
+        per_q: list[list[tuple]] = [[] for _ in q_by_space_list]
+        for g in groups:
+            parts = [
+                (p, caches[s]["mod_rows"][g])
+                for p, s in enumerate(spaces)
+                if g in caches[s]["mod_rows"]
             ]
-        S_cat = np.concatenate(S_all, axis=0)  # (n, nq)
-        ids_cat = cc["ids_cat"]
-        per_q: list[list[tuple]] = [[] for _ in range(nq)]
-        for g in cc["groups"]:
-            sel = cc["group_sel"][g]
-            Sg = S_cat[sel]  # (n_g, nq) — one gather per group
-            ids_g = ids_cat[sel]
-            kk = min(k_per_modality, len(sel))
-            for qi in range(nq):
+            Sg = np.concatenate([scores[p][rows] for p, rows in parts])
+            ids_g = np.concatenate(
+                [caches[spaces[p]]["ids"][rows] for p, rows in parts]
+            )
+            part = np.concatenate(
+                [np.full(len(rows), p) for p, rows in parts]
+            )
+            row = np.concatenate([rows for _, rows in parts])
+            kk = min(k_per_modality, len(ids_g))
+            for qi, hits in enumerate(per_q):
                 top = topk_rows_1d(Sg[:, qi], ids_g, kk)
                 for rank, t in enumerate(top, start=1):
-                    src = int(sel[t])
-                    pay = caches[spaces[cc["sp_idx"][src]]]["payload"][
-                        int(cc["row_idx"][src])
-                    ]
-                    per_q[qi].append(
+                    pay = caches[spaces[part[t]]]["payload"][row[t]]
+                    hits.append(
                         (
                             qi,
                             g,
@@ -2693,7 +2711,7 @@ class MultiModalSearchEngine:
                             rank,
                         )
                     )
-        return [row for rows in per_q for row in rows]
+        return [r for hits in per_q for r in hits]
 
     def _fetch_payload(
         self, corpus: DataFrame, ids: list[int], pay: list[str]
@@ -3157,8 +3175,6 @@ class MultiModalSearchEngine:
         All search paths (HOF, blocked dispatch, batch) work unchanged;
         only the per-row byte and multiply cost shrink by
         ``dim/full_dim``."""
-        import numpy as np
-
         storage = CorpusStorage(base_path)
         df, manifest = storage.load_index(spark, f"{name}_d{dim}")
         full_dim = int(manifest["full_dim"])

@@ -228,7 +228,8 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tpch_q3",
     """
     SELECT o.o_orderkey,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+           round(sum(l.l_extendedprice::DECIMAL(15,2)
+                     * (1 - l.l_discount::DECIMAL(15,2))), 2)::DOUBLE AS revenue,
            o.o_orderdate
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
@@ -242,7 +243,10 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter → join → agg → top-k.
-    customer is broadcast (small side); lineitem never shuffles twice."""
+    customer is broadcast (small side); lineitem never shuffles twice.
+    Revenue is summed over DECIMAL(15,2) prices and discounts (TPC-H's
+    own column type), so the cent rounding is exact: rounding a double
+    sum lands either side of a half-cent depending on the fold order."""
     c = _t(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -258,8 +262,14 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderkey", "o_orderdate")
         .agg(
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+                F.sum(
+                    F.col("l_extendedprice").cast("decimal(15,2)")
+                    * (1 - F.col("l_discount").cast("decimal(15,2)"))
+                ),
+                2,
+            )
+            .cast("double")
+            .alias("revenue")
         )
         .select("o_orderkey", "revenue", "o_orderdate")
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())

@@ -1664,8 +1664,8 @@ def test_compare_cache_survives_ingest_during_cache_build(spark,
     derived structures (group_sel/ids_cat, pre-fix stamped with the
     then-current global epoch) aligned to the OLD matrices while the
     next call rebuilt the per-space caches — wrong ids or IndexError.
-    The derived cache is now keyed on the epochs of the caches it was
-    built from."""
+    The per-modality row positions now live on the per-space caches
+    they index (``mod_rows``), so they cannot fall out of step."""
     eng = MultiModalSearchEngine(spark, dim=32)
     eng.batch_ingest(
         [{"content": f"ccr doc {i}", "modality": ["text", "audio"][i % 2]}
@@ -1693,10 +1693,10 @@ def test_compare_cache_survives_ingest_during_cache_build(spark,
     out = eng.compare_modalities_batch(
         ["ccr race arrival"], k_per_modality=2
     )
-    cc = eng._compare_cache
-    assert len(cc["ids_cat"]) == sum(
-        len(eng._local_cache[s]["ids"]) for s in cc["spaces"]
-    ), "derived compare cache misaligned with per-space caches"
+    for s, c in eng._local_cache.items():
+        assert sum(len(r) for r in c["mod_rows"].values()) == len(
+            c["ids"]
+        ), f"{s}: modality rows misaligned with the cached block"
     text_hits = [r for r in out[0] if r["modality"] == "text"]
     assert text_hits[0]["sim"] == pytest.approx(1.0, abs=1e-5)
     assert text_hits[0]["id"] == 40  # the race-ingested row is served
@@ -1802,7 +1802,9 @@ def test_micro_path_ingest_search_alternation_is_collect_free(
     rebuilt = eng._local_corpus("clip")
     assert np.array_equal(maintained["ids"], rebuilt["ids"])
     assert np.array_equal(maintained["emb"], rebuilt["emb"])
-    assert list(maintained["modality"]) == list(rebuilt["modality"])
+    assert maintained["mod_rows"].keys() == rebuilt["mod_rows"].keys()
+    for m, rows in maintained["mod_rows"].items():
+        assert np.array_equal(rows, rebuilt["mod_rows"][m]), m
     assert maintained["payload"] == rebuilt["payload"]
     assert maintained["bytes"] == rebuilt["bytes"]
 
@@ -2125,9 +2127,12 @@ def test_incremental_cache_parity_under_random_mutation_sequences(spark):
                     maintained["ids"], rebuilt["ids"]
                 ), (space, step)
                 assert np.array_equal(maintained["emb"], rebuilt["emb"])
-                assert list(maintained["modality"]) == list(
-                    rebuilt["modality"]
+                assert (
+                    maintained["mod_rows"].keys()
+                    == rebuilt["mod_rows"].keys()
                 )
+                for m, rows in maintained["mod_rows"].items():
+                    assert np.array_equal(rows, rebuilt["mod_rows"][m])
                 assert maintained["payload"] == rebuilt["payload"]
                 assert maintained["bytes"] == rebuilt["bytes"], (
                     space, step,
@@ -2441,3 +2446,137 @@ def test_concurrent_writers_mint_unique_ids(spark):
     # the micro-path cache absorbed every row exactly once
     out = eng.search("w2 doc 7", k=1)
     assert out[0]["content"] == "w2 doc 7"
+
+
+def test_micro_path_parity_after_interleaved_writes(spark):
+    """Filtered search and compare_modalities_rows served from caches
+    that ingests extended and removes pruned (their per-modality row
+    positions included) return what the Spark blocked scorer returns
+    over the same corpus."""
+    import random
+
+    rng = random.Random(2207)
+    mods = ["text", "image", "video", "audio"]
+    eng = MultiModalSearchEngine(spark, dim=32)
+    eng.batch_ingest(
+        [{"content": f"il doc {i} topic {i % 6}", "modality": mods[i % 4]}
+         for i in range(80)]
+    )
+    eng.search("il doc 1", k=2)  # builds the clip cache
+    eng.search("il doc 2", k=2, filter_content_type="audio")  # clap
+    live, nxt = list(range(80)), 80
+    for step in range(12):
+        if step % 3 == 2:
+            victims = rng.sample(live, 3)
+            for v in victims:
+                live.remove(v)
+            eng.remove(victims)
+        else:
+            n = rng.randint(1, 4)
+            eng.batch_ingest(
+                [{"content": f"il doc {nxt + j} topic {(nxt + j) % 6}",
+                  "modality": rng.choice(mods)}
+                 for j in range(n)]
+            )
+            live.extend(range(eng._max_id - n + 1, eng._max_id + 1))
+            nxt += n
+    # the caches were maintained in place, never rebuilt
+    assert eng._local_cache.keys() == {"clip", "clap"}
+    assert all(c["epoch"] == eng._epoch for c in eng._local_cache.values())
+    key = lambda r: (r["modality"], r["rank"])  # noqa: E731
+    for q in ("il doc 7 topic 1", f"il doc {nxt - 1} topic 3"):
+        for m in mods:
+            loc = eng.search(q, k=5, filter_content_type=m)
+            assert eng.last_route["route"] == "exact-local"
+            blk = eng.search(q, k=5, filter_content_type=m,
+                             scorer="blocked")
+            assert [r["id"] for r in loc] == [r["id"] for r in blk], (q, m)
+            assert all(r["modality"] == m and r["id"] in live for r in loc)
+            for a, b in zip(loc, blk):
+                assert a["sim"] == pytest.approx(b["sim"], abs=1e-12)
+        rows = eng.compare_modalities_rows(q, k_per_modality=3)
+        assert eng.last_route["route"] == "exact-local"
+        blk = sorted(
+            eng.compare_modalities(q, 3, scorer="blocked").collect(),
+            key=key,
+        )
+        assert [
+            (r["modality"], r["rank"], r["id"], r["space"], r["display_name"])
+            for r in rows
+        ] == [
+            (r["modality"], r["rank"], r["id"], r["space"], r["display_name"])
+            for r in blk
+        ]
+        for a, b in zip(rows, blk):
+            assert a["sim"] == pytest.approx(b["sim"], abs=1e-12)
+
+
+def test_filtered_local_search_copies_no_block(spark):
+    """A content-type filtered micro-path search scores the whole block
+    and indexes the score vector: its peak Python allocation stays far
+    below the cached matrix (gathering the filtered rows instead copied
+    most of it on every call)."""
+    import tracemalloc
+
+    dim = 256
+    eng = MultiModalSearchEngine(spark, dim=dim)
+    eng.batch_ingest(
+        [{"content": f"tm doc {i}", "modality": "image" if i % 5 else "text"}
+         for i in range(2000)]
+    )
+    eng.search("tm doc 1", k=5, filter_content_type="image")  # build
+    assert eng.last_route["route"] == "exact-local"
+    nbytes = eng._local_cache["clip"]["emb"].nbytes
+    q = fake_embed_numpy("tm doc 7", "clip", dim).tolist()
+    tracemalloc.start()
+    try:
+        out = eng.search(q, k=5, filter_content_type="image")
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert eng.last_route["route"] == "exact-local"
+    assert [r["content"] for r in out][0] == "tm doc 7"
+    assert all(r["modality"] == "image" for r in out)
+    assert peak < nbytes / 20, (peak, nbytes)
+
+
+def test_local_cache_payload_equals_row_collect(spark):
+    """The driver cache is built from one Arrow collect; its payload
+    dicts must hold what a Row collect gives — same keys in the same
+    order, equal values of the same Python types — for every column
+    type a loaded corpus may carry, and the matrix the same floats."""
+    import datetime
+    import decimal
+
+    import numpy as np
+
+    base = MultiModalSearchEngine(spark, dim=8)
+    base.batch_ingest(
+        [{"content": f"pc doc {i}", "modality": ["text", "image"][i % 2]}
+         for i in range(6)]
+    )
+    items = base.items.select(
+        "*",
+        F.lit(datetime.datetime(2024, 1, 2, 3, 4, 5)).alias("ts"),
+        F.lit(datetime.date(2024, 1, 2)).alias("dt"),
+        F.create_map(F.lit("a"), F.col("id")).alias("mp"),
+        F.struct(F.col("id").alias("x"), F.lit("y").alias("y")).alias("st"),
+        F.lit(b"ab").cast("binary").alias("bn"),
+        F.lit(decimal.Decimal("1.25")).cast("decimal(10,2)").alias("dc"),
+        F.array(F.lit(1), F.lit(2)).alias("ar"),
+        F.lit(None).cast("string").alias("nl"),
+    )
+    eng = MultiModalSearchEngine(spark, items=items, dim=8)
+    cache = eng._local_corpus("clip")
+    pay_cols = [c for c in items.columns if c not in ("embedding", "dim")]
+    rows = {r["id"]: r for r in items.where("space = 'clip'").collect()}
+    assert sorted(cache["ids"].tolist()) == sorted(rows)
+    for i, got in zip(cache["ids"].tolist(), cache["payload"]):
+        assert list(got) == pay_cols
+        for c in pay_cols:
+            want = rows[i][c]
+            assert got[c] == want and type(got[c]) is type(want), c
+    want_emb = np.array(
+        [rows[i]["embedding"] for i in cache["ids"].tolist()], dtype=np.float64
+    )
+    assert np.array_equal(cache["emb"], want_emb)
